@@ -7,6 +7,7 @@ warm JVM, warm = min of gated steady-state runs), and optionally dumps
 
 Usage:
   python bench_extra.py [query ...]           # default: bench.py HEADLINE
+  python bench_extra.py --jobs <event-log dir>  # per-SQL-execution report
   FS_PLANS_DIR=plans/r06 FS_PLAN_SUFFIX=_before python bench_extra.py ...
   FS_WARM_REPS=2 python bench_extra.py semantic_dedup dedup_groups
 
@@ -32,7 +33,60 @@ def _run_to_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def jobs_report(evdir: str) -> None:
+    """Jobs, tasks and wall time per SQL execution and call site, read
+    from the uncompressed Spark event logs under ``evdir`` (files only;
+    no Spark session).  Jobs outside any SQL execution (RDD actions) are
+    summed into one row per application, execution ``-``, timed by job
+    spans.  Rolling logs (``eventlog_v2_*/events_<n>_*``) are read in
+    order as one application."""
+    rows, job_row, stage_row, job_t0 = {}, {}, {}, {}
+    for root, _, files in os.walk(evdir):
+        app = root  # ids are per application: replaced at its start event
+        for fname in sorted(f for f in files if not f.startswith(".")):
+            with open(os.path.join(root, fname)) as fh:
+                for line in fh:
+                    ev = json.loads(line)
+                    kind = ev["Event"].rsplit(".", 1)[-1]
+                    if kind == "SparkListenerApplicationStart":
+                        app = ev.get("App ID") or fname
+                    elif kind == "SparkListenerSQLExecutionStart":
+                        rows[(app, ev["executionId"])] = {
+                            "jobs": 0, "tasks": 0, "ms": 0, "t0": ev["time"],
+                            "site": ev.get("description") or "",
+                        }
+                    elif kind == "SparkListenerSQLExecutionEnd":
+                        r = rows[(app, ev["executionId"])]
+                        r["ms"] = ev["time"] - r["t0"]
+                    elif kind == "SparkListenerJobStart":
+                        props = ev.get("Properties") or {}
+                        eid = props.get("spark.sql.execution.id")
+                        key = (app, "-" if eid is None else int(eid))
+                        r = rows.setdefault(key, {"jobs": 0, "tasks": 0, "ms": 0, "site": ""})
+                        r["jobs"] += 1
+                        r["site"] = props.get("callSite.short") or r["site"]
+                        job_row[(app, ev["Job ID"])] = r
+                        stage_row.update({(app, sid): r for sid in ev["Stage IDs"]})
+                        if eid is None:
+                            job_t0[(app, ev["Job ID"])] = ev["Submission Time"]
+                    elif kind == "SparkListenerJobEnd" and (app, ev["Job ID"]) in job_t0:
+                        t0 = job_t0.pop((app, ev["Job ID"]))
+                        job_row[(app, ev["Job ID"])]["ms"] += ev["Completion Time"] - t0
+                    elif kind == "SparkListenerTaskEnd" and (app, ev["Stage ID"]) in stage_row:
+                        stage_row[(app, ev["Stage ID"])]["tasks"] += 1
+    print(f"{'execution':>10} {'jobs':>5} {'tasks':>6} {'wall_s':>8}  call site")
+    for key, r in sorted(rows.items(), key=lambda kv: -kv[1]["ms"]):
+        print(f"{key[1]:>10} {r['jobs']:>5} {r['tasks']:>6} {r['ms'] / 1e3:>8.3f}  {r['site']}")
+    total = {k: sum(r[k] for r in rows.values()) for k in ("jobs", "tasks", "ms")}
+    print(f"{'total':>10} {total['jobs']:>5} {total['tasks']:>6} {total['ms'] / 1e3:>8.3f}")
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--jobs"]:
+        if len(sys.argv) != 3:
+            raise SystemExit("usage: bench_extra.py --jobs <event-log dir>")
+        jobs_report(sys.argv[2])
+        return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     reps = int(os.environ.get("FS_WARM_REPS", "2"))

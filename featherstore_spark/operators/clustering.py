@@ -251,6 +251,8 @@ def semantic_dedup(
     dropping data because it was merely popular is the wrong default)."""
     from featherstore_spark.operators.similarity import _cos_prenorm, _norm_hof
 
+    # the ε bounds of the BLAS branch below assume a 6-dp threshold
+    thr = round(float(threshold), 6)
     assigned, _ = kmeans_fit_assign(
         df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, dim=dim, seed=seed
     )
@@ -312,7 +314,6 @@ def semantic_dedup(
         return members.select(
             F.col("mid").alias(id_col), "cluster_id", F.lit(True).alias("keep")
         )
-    thr = float(threshold)
     if pairs_est <= _SEMDEDUP_PAIR_JOIN_MAX:
         # SMALL pair space: the plain within-cluster equi-join (with the
         # per-row-norm cosine) beats the BLAS machinery's fixed costs
@@ -369,12 +370,6 @@ def semantic_dedup(
         na_n, nb_n = len(a_pdf), len(b_pdf)
         if na_n == 0 or nb_n == 0:
             return empty
-        if na_n * nb_n > max_task_pairs:
-            raise ValueError(
-                f"semantic_dedup: task pair block {na_n}x{nb_n} exceeds "
-                f"{max_task_pairs}; cluster too dense for the group count — "
-                "set max_cluster_size or raise the memory budget"
-            )
 
         def _unit(p):
             x = np.stack([np.asarray(v, dtype=np.float64) for v in p["mv"]])
@@ -385,21 +380,30 @@ def semantic_dedup(
 
         xa = _unit(a_pdf)
         xb = xa if within else _unit(b_pdf)
-        s = xa @ xb.T
         ids_a = a_pdf["mid"].to_numpy()
         ids_b = ids_a if within else b_pdf["mid"].to_numpy()
-        mask = ids_a[:, None] < ids_b[None, :] if within else np.ones_like(s, dtype=bool)
-        cert = (s >= thr - 4e-7) & mask
-        bord = (s >= thr - 6e-7) & ~(s >= thr - 4e-7) & mask
+        # row slices keep each S-block within max_task_pairs when hash
+        # variance overfills a group; the ε split absorbs the last-ulp
+        # differences a sliced matmul may have
+        step = max(1, max_task_pairs // nb_n)
+        drops, lo, hi = [], [], []
+        for i in range(0, na_n, step):
+            s = xa[i:i + step] @ xb.T
+            ia = ids_a[i:i + step]
+            mask = ia[:, None] < ids_b[None, :] if within else np.ones_like(s, dtype=bool)
+            cert = (s >= thr - 4e-7) & mask
+            bord = (s >= thr - 6e-7) & ~(s >= thr - 4e-7) & mask
+            ii, jj = np.nonzero(cert)
+            drops.append(np.maximum(ia[ii], ids_b[jj]))
+            ii, jj = np.nonzero(bord)
+            lo.append(np.minimum(ia[ii], ids_b[jj]))
+            hi.append(np.maximum(ia[ii], ids_b[jj]))
         out = []
-        ii, jj = np.nonzero(cert)
-        if len(ii):
-            drops = np.unique(np.maximum(ids_a[ii], ids_b[jj]))
+        drops = np.unique(np.concatenate(drops))
+        if len(drops):
             out.append(pd.DataFrame({"id_a": drops, "id_b": drops, "certain": True}))
-        ii, jj = np.nonzero(bord)
-        if len(ii):
-            lo = np.minimum(ids_a[ii], ids_b[jj])
-            hi = np.maximum(ids_a[ii], ids_b[jj])
+        lo, hi = np.concatenate(lo), np.concatenate(hi)
+        if len(lo):
             out.append(pd.DataFrame({"id_a": lo, "id_b": hi, "certain": False}))
         return pd.concat(out, ignore_index=True) if out else empty
 

@@ -1329,6 +1329,14 @@ def connected_components(
     At the fixpoint the edge set IS the component map: a star per
     component, every node pointing at the component minimum.
 
+    The input is materialized ONCE: one eager ``localCheckpoint`` of the
+    distinct ``(u, v)`` pairs, self-pairs included.  The node set and
+    the ``u != v`` edge set both derive lazily from it, so the caller's
+    ``pairs`` lineage (MinHash, filters, …) executes exactly once per
+    call (checkpointing nodes and edges separately would run it twice).
+    Besides that, one checkpoint per contraction round and one for the
+    returned labels: ``rounds + 2`` in total.
+
     Per round the new edge set is ``localCheckpoint``-ed — LOGICAL
     lineage truncation, not just physical: one star round references the
     previous edge set ~6× (symmetrized neighbors + the min join on both
@@ -1344,17 +1352,13 @@ def connected_components(
     reliable ``.checkpoint()`` (spark.checkpoint.dir) — same lineage
     semantics, HDFS-durable blocks.  ``stats``, if given, gets
     ``stats["rounds"]`` = contraction rounds executed."""
-    nodes = (
-        pairs.select(F.explode(F.array(F.col(id_a), F.col(id_b))).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
+    uv = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True)
     )
+    nodes = uv.select(F.explode(F.array("u", "v")).alias("id")).distinct()
+    edges = uv.where(F.col("u") != F.col("v"))
 
     def _sig(e: DataFrame) -> tuple:
         # Order-independent fixpoint signature over the DISTINCT edge set:

@@ -41,30 +41,6 @@ def _cos(v_a: str, v_b: str) -> F.Column:
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
-def _dot_fixed(v_a, v_b, dim: int) -> F.Column:
-    """Dot product of two array<double> columns with a KNOWN length bound,
-    expanded to a flat ``0.0 + a[1]*b[1] + … + a[dim]*b[dim]`` expression.
-
-    Bit-identical to the ``aggregate(zip_with(a, b, *), 0.0, +)`` fold in
-    :func:`_cos` whenever ``dim == max(len(a), len(b))`` (the zip length):
-    the addition tree is the same left-associated order, and
-    ``try_element_at`` past the shorter array's end yields NULL exactly
-    like ``zip_with``'s padding (NULL then poisons the sum the same way).
-    Callers must therefore only pass a ``dim`` their pipeline asserts —
-    e.g. after ``clustering.quantize_vec``'s size check, or a declared
-    embedding dimension.  The win is plan shape, not semantics:
-    higher-order functions evaluate interpreted (lambda dispatch per
-    element), while this form compiles into whole-stage codegen (guide
-    §4.1: prefer built-ins/codegen over interpreted per-element
-    execution)."""
-    a = F.col(v_a) if isinstance(v_a, str) else v_a
-    b = F.col(v_b) if isinstance(v_b, str) else v_b
-    e = F.lit(0.0)
-    for i in range(1, dim + 1):
-        e = e + F.try_element_at(a, F.lit(i)) * F.try_element_at(b, F.lit(i))
-    return e
-
-
 def _norm_hof(v) -> F.Column:
     """sqrt(sum of squares) — EXACTLY the ``na``/``nb`` leg of
     :func:`_cos` (same HOF fold, any array length).  Kept in HOF form on
@@ -75,21 +51,17 @@ def _norm_hof(v) -> F.Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-def _cos_prenorm(v_a, v_b, na, nb, dim: int | None = None) -> F.Column:
+def _cos_prenorm(v_a, v_b, na, nb) -> F.Column:
     """:func:`_cos` with PRE-COMPUTED norm columns: on a pair join, each
     side's norm is a pure function of that side's vector, so computing it
     once per ROW before the join (instead of once per PAIR inside the
     join condition) removes two thirds of the per-pair arithmetic with
-    bit-identical results (same expression, same input).  With ``dim``
-    (callers whose pipeline asserts the vector length) the dot also
-    switches to the codegen :func:`_dot_fixed` expansion; without it the
-    generic HOF fold is kept."""
-    if dim is not None:
-        dot = _dot_fixed(v_a, v_b, dim)
-    else:
-        dot = F.aggregate(
-            F.zip_with(v_a, v_b, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        )
+    bit-identical results (same expression, same input).  The dot is the
+    generic HOF fold: a fixed-dim expansion into one codegen'd sum
+    measured slower (61 s vs 33 s)."""
+    dot = F.aggregate(
+        F.zip_with(v_a, v_b, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
+    )
     na = F.col(na) if isinstance(na, str) else na
     nb = F.col(nb) if isinstance(nb, str) else nb
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))

@@ -20,6 +20,19 @@ Shape notes for 100 TB:
 - The near-dup stage is the transitive-group variant
   (minhash pairs → connected components → min-id representative);
   pass ``near_dup='none'`` to skip it for quick passes.
+- Every stage executes once per call.  Exactly the intermediates with
+  several consumers are materialized (eager ``localCheckpoint``):
+  ``base`` right after the flag columns (read by exact dedup, MinHash,
+  the funnel aggregate and the kept lineage); the distinct MinHash pairs
+  inside ``connected_components`` (read by its node and edge sets); and
+  the returned corpus (read by the PII/cut sum and the caller's write).
+  The exact-dedup winners stay lazy: they are one md5 groupBy over the
+  materialized ``base``, cheaper to run twice than to write out.
+- Checkpoint blocks are executor-local with no lineage behind them:
+  losing an executor fails the job, and the returned corpus too.  On a
+  cluster with executor churn, swap ``localCheckpoint`` for reliable
+  ``.checkpoint()`` (``spark.checkpoint.dir``) at these points — same
+  plan shape, durable blocks.
 
 The CLI front-end is ``featherstore_spark corpus`` (cli.py)."""
 
@@ -151,6 +164,10 @@ def corpus_pipeline(
         if "quality" in stages
         else F.lit(True),
     )
+    # base feeds exact dedup, MinHash (via surv), the funnel aggregate and
+    # the kept -> spans -> scrub lineage: materialize it once, here, so
+    # c4/repetition/quality never re-execute per consumer
+    base = base.localCheckpoint(eager=True)
 
     surv = base.where("__lang_keep AND c4_keep AND repetition_ok AND quality_keep")
 
@@ -179,12 +196,6 @@ def corpus_pipeline(
     else:
         base = base.withColumn("near_keep", F.col("exact_keep"))
 
-    # base now feeds THREE consumers (funnel agg, the kept->scrub->write
-    # lineage, and the pii count) — materialize it once so the dedup
-    # joins and filter exprs never re-execute per action (the rollup/
-    # char_bigram_lm multi-consumer discipline)
-    base = base.localCheckpoint(eager=True)
-
     # funnel report: ONE aggregation over the flags
     def _cnt(cond):
         return F.sum(F.expr(cond).cast("long"))
@@ -206,6 +217,15 @@ def corpus_pipeline(
     if substring_dedup:
         from featherstore_spark.operators.dedup import drop_duplicate_spans
 
+        # drop_duplicate_spans' small-input rebalance never fires here:
+        # without CBO a join's size estimate is the product of its inputs'
+        # and a localCheckpoint keeps it, so this input (joins over the
+        # checkpointed base) is estimated at ~7e60 bytes for 1.5k docs and
+        # the lattice runs as two 1-task jobs (1.3 s, 1.6 s).  An ungated
+        # round-robin of this input made them 4-task
+        # jobs (0.49 s, 0.45 s) but did not pay end to end: near_dup
+        # rows_per_s median 145.0 vs 143.4 without it, winning 1 of 6
+        # interleaved pairs (local[4], seeds 1-6).  Not applied.
         spans = drop_duplicate_spans(
             kept.select(id_col, F.col("clean_text").alias("text")),
             id_col=id_col, min_len=substring_min_len,
@@ -224,8 +244,10 @@ def corpus_pipeline(
         .join(scrubbed, id_col)
         .withColumnRenamed("clean_text", "text")
     )
+    # out feeds the PII/cut sum below AND the caller's write: one pass
+    # over the span lattice, PII regexes and split, not two
     out = split_assign(out, key_col=id_col, weights=split_weights,
-                       names=split_names, seed=seed)
+                       names=split_names, seed=seed).localCheckpoint(eager=True)
 
     pii_row = out.agg(
         F.sum(

@@ -50,6 +50,39 @@ def test_funnel_and_survivors(spark, corpus):
     assert ids == [1]
 
 
+def test_pipeline_runs_input_once_and_write_reruns_nothing(spark, corpus, tmp_path):
+    """Every stage executes once per call: the input lineage is evaluated
+    by ONE pass of the flag plan (it scans the input twice: the raw
+    columns and the C4 cleaner), not again by dedup or the funnel.  The
+    returned corpus is materialized, so the caller's write re-runs
+    neither the input nor the spans/PII/split lineage.  Counted by a
+    Python UDF accumulator placed in the input lineage."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def tick(x):
+        acc.add(1)
+        return x
+
+    counted = corpus.withColumn("text", tick.asNondeterministic()(F.col("text")))
+    out, stats = corpus_pipeline(
+        counted, minhash_threshold=0.6, quality_threshold=-1.0, substring_dedup=True
+    )
+    n = corpus.count()
+    assert acc.value == 2 * n
+    assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
+    out.write.parquet(str(tmp_path / "corpus"))
+    assert acc.value == 2 * n
+    ref, ref_stats = corpus_pipeline(
+        corpus, minhash_threshold=0.6, quality_threshold=-1.0, substring_dedup=True
+    )
+    assert stats == ref_stats
+    assert stats["after_near_dedup"] == 1
+    written = spark.read.parquet(str(tmp_path / "corpus"))
+    cols = sorted(ref.columns)
+    assert sorted(written.select(*cols).collect()) == sorted(ref.select(*cols).collect())
+
+
 def test_pii_redaction_and_passthrough(spark, corpus):
     out, stats = corpus_pipeline(
         corpus.withColumn("lang", F.lit("en")),

@@ -208,3 +208,68 @@ def test_semantic_dedup_exact_threshold_boundary(spark):
         f"boundary pair: exact round6 cos={exact_ab}, keep={out[2]}"
     )
     assert out[3] is True and out[4] is False  # identical pair collapses
+
+
+def test_semantic_dedup_over_cap_block_is_sliced(spark, monkeypatch):
+    """A cluster whose members all hash to BLAS group 0 for every group
+    count 1..8 (xxhash64 ≡ 0 mod 840) puts 2200 x 2200 = 4.84M pairs in
+    one task block, above the 4M per-task cap.  The block is scored in
+    row slices instead of failing the job, and the keep flags equal a
+    numpy recomputation."""
+    import numpy as np
+
+    import featherstore_spark.operators.clustering as clustering_mod
+
+    n, dim, threshold = 2200, 64, 0.95
+    ids = sorted(
+        r["id"]
+        for r in spark.range(0, 4_000_000)
+        .where(F.pmod(F.xxhash64("id"), F.lit(840)) == 0)
+        .limit(n)
+        .collect()
+    )
+    assert len(ids) == n
+    rng = np.random.RandomState(11)
+    x = rng.uniform(-0.5, 0.5, size=(n, dim))
+    # every 10th vector is a near copy of its predecessor
+    x[1::10] = x[0::10] + rng.uniform(-1e-4, 1e-4, size=(n // 10, dim))
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in zip(ids, x)],
+        "vec_id long, embedding array<double>",
+    )
+    monkeypatch.setattr(clustering_mod, "_SEMDEDUP_PAIR_JOIN_MAX", 0)
+    got = {
+        r["vec_id"]: r["keep"]
+        for r in semantic_dedup(df, k=1, iters=1, threshold=threshold).collect()
+    }
+    unit = x / np.linalg.norm(x, axis=1)[:, None]
+    upper = np.triu(unit @ unit.T, 1)  # rows are in id order: i < j
+    tri = np.triu(np.ones((n, n), dtype=bool), 1)
+    assert np.abs(upper[tri] - threshold).min() > 1e-6  # no pair near the cut
+    drop = ((upper >= threshold) & tri).any(axis=0)
+    assert drop.sum() == n // 10
+    assert got == {i: not d for i, d in zip(ids, drop)}
+
+
+def test_semantic_dedup_threshold_rounded_to_6dp(spark, monkeypatch):
+    """threshold=0.8500001 is read as 0.85 on both pair-phase branches: a
+    pair at cosine 0.8500002 rounds to 0.850000, so the join branch's
+    round6(cos) >= t drops it exactly as the BLAS branch's certain zone
+    does."""
+    import featherstore_spark.operators.clustering as clustering_mod
+
+    dim, c = 64, 0.8500002
+    a = [1.0] + [0.0] * (dim - 1)
+    b = [c, math.sqrt(1 - c * c)] + [0.0] * (dim - 2)
+    far = [0.0] * (dim - 1) + [1.0]
+    df = spark.createDataFrame(
+        [(1, a), (2, b), (3, far)], "vec_id long, embedding array<double>"
+    )
+
+    def keep():
+        out = semantic_dedup(df, k=1, iters=1, threshold=0.8500001)
+        return {r["vec_id"]: r["keep"] for r in out.collect()}
+
+    joined = keep()
+    monkeypatch.setattr(clustering_mod, "_SEMDEDUP_PAIR_JOIN_MAX", 0)
+    assert keep() == joined == {1: True, 2: False, 3: True}

@@ -411,6 +411,31 @@ def test_connected_components_transitive_chains(spark):
     assert got == {3: 3, 5: 3, 9: 3, 11: 3, 20: 20, 21: 20, 40: 20, 41: 20}
 
 
+def test_connected_components_runs_pairs_lineage_once(spark):
+    """The pairs lineage is evaluated once per call: nodes and edges both
+    derive from one materialized copy of the input.  Counted by a Python
+    UDF accumulator placed in the input lineage; labels are unchanged."""
+    from featherstore_spark.operators.dedup import connected_components
+
+    rows = [(3, 5), (5, 9), (9, 11), (20, 21), (40, 41), (41, 20), (7, 7)]
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tick(x):
+        acc.add(1)
+        return x
+
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long").withColumn(
+        "id_a", tick.asNondeterministic()(F.col("id_a"))
+    )
+    labels = connected_components(pairs)
+    assert acc.value == len(rows)
+    got = {r["id"]: r["group_id"] for r in labels.collect()}
+    # the self-pair's singleton keeps its own id
+    assert got == {3: 3, 5: 3, 9: 3, 11: 3, 20: 20, 21: 20, 40: 20, 41: 20, 7: 7}
+    assert acc.value == len(rows)
+
+
 def test_connected_components_iteration_cap(spark):
     from featherstore_spark.operators.dedup import connected_components
 
