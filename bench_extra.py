@@ -33,13 +33,20 @@ def _run_to_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _new_row() -> dict:
+    return {"jobs": 0, "tasks": 0, "ms": 0, "run_ms": 0, "cpu_ns": 0, "site": ""}
+
+
 def jobs_report(evdir: str) -> None:
-    """Jobs, tasks and wall time per SQL execution and call site, read
-    from the uncompressed Spark event logs under ``evdir`` (files only;
-    no Spark session).  Jobs outside any SQL execution (RDD actions) are
-    summed into one row per application, execution ``-``, timed by job
-    spans.  Rolling logs (``eventlog_v2_*/events_<n>_*``) are read in
-    order as one application."""
+    """Jobs, tasks, wall time and summed task executor run/CPU seconds
+    (``Task Metrics`` of ``SparkListenerTaskEnd``) per SQL execution and
+    call site, read from the uncompressed Spark event logs under
+    ``evdir`` (files only; no Spark session).  Run minus CPU is time
+    the tasks spent waiting (I/O, shuffle fetch, GC, locks).  Jobs
+    outside any SQL execution (RDD actions) are summed into one row per
+    application, execution ``-``, timed by job spans.  Rolling logs
+    (``eventlog_v2_*/events_<n>_*``) are read in order as one
+    application."""
     rows, job_row, stage_row, job_t0 = {}, {}, {}, {}
     for root, _, files in os.walk(evdir):
         app = root  # ids are per application: replaced at its start event
@@ -52,7 +59,7 @@ def jobs_report(evdir: str) -> None:
                         app = ev.get("App ID") or fname
                     elif kind == "SparkListenerSQLExecutionStart":
                         rows[(app, ev["executionId"])] = {
-                            "jobs": 0, "tasks": 0, "ms": 0, "t0": ev["time"],
+                            **_new_row(), "t0": ev["time"],
                             "site": ev.get("description") or "",
                         }
                     elif kind == "SparkListenerSQLExecutionEnd":
@@ -62,7 +69,7 @@ def jobs_report(evdir: str) -> None:
                         props = ev.get("Properties") or {}
                         eid = props.get("spark.sql.execution.id")
                         key = (app, "-" if eid is None else int(eid))
-                        r = rows.setdefault(key, {"jobs": 0, "tasks": 0, "ms": 0, "site": ""})
+                        r = rows.setdefault(key, _new_row())
                         r["jobs"] += 1
                         r["site"] = props.get("callSite.short") or r["site"]
                         job_row[(app, ev["Job ID"])] = r
@@ -73,12 +80,20 @@ def jobs_report(evdir: str) -> None:
                         t0 = job_t0.pop((app, ev["Job ID"]))
                         job_row[(app, ev["Job ID"])]["ms"] += ev["Completion Time"] - t0
                     elif kind == "SparkListenerTaskEnd" and (app, ev["Stage ID"]) in stage_row:
-                        stage_row[(app, ev["Stage ID"])]["tasks"] += 1
-    print(f"{'execution':>10} {'jobs':>5} {'tasks':>6} {'wall_s':>8}  call site")
+                        r = stage_row[(app, ev["Stage ID"])]
+                        m = ev.get("Task Metrics") or {}
+                        r["tasks"] += 1
+                        r["run_ms"] += m.get("Executor Run Time", 0)
+                        r["cpu_ns"] += m.get("Executor CPU Time", 0)
+
+    def show(name, r):
+        print(f"{name:>10} {r['jobs']:>5} {r['tasks']:>6} {r['ms'] / 1e3:>8.3f} "
+              f"{r['run_ms'] / 1e3:>8.3f} {r['cpu_ns'] / 1e9:>8.3f}  {r['site']}")
+
+    print(f"{'execution':>10} {'jobs':>5} {'tasks':>6} {'wall_s':>8} {'run_s':>8} {'cpu_s':>8}  call site")
     for key, r in sorted(rows.items(), key=lambda kv: -kv[1]["ms"]):
-        print(f"{key[1]:>10} {r['jobs']:>5} {r['tasks']:>6} {r['ms'] / 1e3:>8.3f}  {r['site']}")
-    total = {k: sum(r[k] for r in rows.values()) for k in ("jobs", "tasks", "ms")}
-    print(f"{'total':>10} {total['jobs']:>5} {total['tasks']:>6} {total['ms'] / 1e3:>8.3f}")
+        show(key[1], r)
+    show("total", {k: "" if k == "site" else sum(r[k] for r in rows.values()) for k in _new_row()})
 
 
 def main() -> None:

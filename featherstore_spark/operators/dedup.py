@@ -642,10 +642,13 @@ def matrix_allpairs_candidates(
 
     Requires ``threshold > 0`` (at <= 0 even disjoint and empty-set
     pairs qualify, which a candidate generator cannot represent) and
-    unique ids.  ``max_task_pairs`` bounds one task's na·nb pair block
-    (the float32 accumulator is 4·na·nb bytes); a block too dense for
-    the budget should raise ``groups`` — or switch to LSH, which is the
-    100 TB path once exactness is negotiable."""
+    unique ids.  ``max_task_pairs`` bounds the float32 accumulator of
+    one matmul (4 bytes per pair): a task block with na·nb above it is
+    processed in row slices of ``max_task_pairs // nb`` a-side docs,
+    so hash variance that overfills a group costs more matmuls, never
+    a failed job; a block under the cap is one slice.  A corpus whose
+    blocks are all far over the cap should raise ``groups`` — or switch
+    to LSH, which is the 100 TB path once exactness is negotiable."""
     if threshold <= 0:
         raise ValueError(
             "matrix_allpairs_candidates requires threshold > 0: at <= 0 every "
@@ -673,12 +676,6 @@ def matrix_allpairs_candidates(
         na, nb = len(a_pdf), len(b_pdf)
         if na == 0 or nb == 0:
             return empty
-        if na * nb > max_task_pairs:
-            raise ValueError(
-                f"matrix_allpairs_candidates: task pair block {na}x{nb} exceeds "
-                f"max_task_pairs={max_task_pairs}; raise groups= (quadratic "
-                "per-task memory) or use method='lsh'"
-            )
         a_sets = [np.asarray(s, dtype=np.int64) for s in a_pdf[set_col]]
         b_sets = a_sets if within else [np.asarray(s, dtype=np.int64) for s in b_pdf[set_col]]
         sa = np.array([len(s) for s in a_sets], dtype=np.float64)
@@ -694,25 +691,36 @@ def matrix_allpairs_candidates(
             order = np.argsort(cols, kind="stable")
             return rows[order], cols[order]
 
-        ra, ca = _cols(a_sets)
-        rb, cb = _cols(b_sets) if not within else (ra, ca)
-        inter = np.zeros((na, nb), dtype=np.float32)
-        for lo in range(0, len(vocab), vocab_chunk):
-            hi = min(lo + vocab_chunk, len(vocab))
-            a0, a1 = np.searchsorted(ca, (lo, hi))
-            b0, b1 = (a0, a1) if within else tuple(np.searchsorted(cb, (lo, hi)))
-            if a1 == a0 or b1 == b0:
-                continue
-            xa = np.zeros((na, hi - lo), dtype=np.float32)
-            xa[ra[a0:a1], ca[a0:a1] - lo] = 1.0
-            if within:
-                xb = xa
-            else:
+        rb, cb = _cols(b_sets)
+        # row slices of the a side keep each accumulator within
+        # max_task_pairs; a within-group block under the cap is one
+        # slice that reuses the b matrix as its own a side
+        step = max(1, max_task_pairs // nb)
+        hits_a, hits_b = [], []
+        for i in range(0, na, step):
+            a_rows = a_sets[i : i + step]
+            whole = within and len(a_rows) == na
+            ra, ca = (rb, cb) if whole else _cols(a_rows)
+            inter = np.zeros((len(a_rows), nb), dtype=np.float32)
+            for lo in range(0, len(vocab), vocab_chunk):
+                hi = min(lo + vocab_chunk, len(vocab))
+                a0, a1 = np.searchsorted(ca, (lo, hi))
+                b0, b1 = (a0, a1) if whole else tuple(np.searchsorted(cb, (lo, hi)))
+                if a1 == a0 or b1 == b0:
+                    continue
                 xb = np.zeros((nb, hi - lo), dtype=np.float32)
                 xb[rb[b0:b1], cb[b0:b1] - lo] = 1.0
-            inter += xa @ xb.T
-        union = sa[:, None] + sb[None, :] - inter
-        ia, ib = np.nonzero(inter >= (thr - eps) * union)
+                if whole:
+                    xa = xb
+                else:
+                    xa = np.zeros((len(a_rows), hi - lo), dtype=np.float32)
+                    xa[ra[a0:a1], ca[a0:a1] - lo] = 1.0
+                inter += xa @ xb.T
+            union = sa[i : i + step, None] + sb[None, :] - inter
+            ia, ib = np.nonzero(inter >= (thr - eps) * union)
+            hits_a.append(ia + i)
+            hits_b.append(ib)
+        ia, ib = np.concatenate(hits_a), np.concatenate(hits_b)
         if len(ia) == 0:
             return empty
         ids_a = a_pdf["id"].to_numpy()[ia]

@@ -6,8 +6,17 @@ files, /root/reference/pkg/storage/parquet/parquet.go:86-89).
 Design:
 - Output is hash-bucketed by entity (``p_bucket``); the manifest
   (``_manifest.json`` next to the data) records per-bucket status,
-  row_count, a 64-bit content hash (xor of per-row xxhash64 — order
-  independent), and lineage (input fingerprint + pipeline params).
+  row_count, a 64-bit content hash, the name of the row hash that
+  produced it (``row_hash``), and lineage (input fingerprint + pipeline
+  params).
+- The row hash (:data:`ROW_HASH`) is Spark's ``xxhash64`` over the row's
+  TYPED values, every column in schema order except ``p_bucket``.  A
+  column whose type contains a map or variant at any depth is hashed
+  through its string rendering (``xxhash64`` rejects those types).  Null
+  values are skipped (they leave the running hash unchanged).  A bucket's
+  content hash is the xor of its row hashes, so it does not depend on
+  row order.  Byte, short and int values hash identically, so a format
+  that widens small ints on write (Iceberg) reads back the same hash.
 - A resumed run recomputes ONLY buckets not marked done: the pipeline
   filters its input to pending buckets *before* any heavy work (the bucket
   is a pure function of conv_id, so filtering pushes to the scan), then
@@ -26,25 +35,51 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType, VariantType
 
 MANIFEST = "_manifest.json"
+
+#: Name of the row hash behind each bucket's ``content_hash``, recorded
+#: per bucket by :meth:`CheckpointManifest.mark_done`.  Entries written
+#: before the tag existed carry none (their hash was over string casts).
+ROW_HASH = "xxhash64-typed"
 
 
 def bucket_col(entity_col: str = "conv_id", n_buckets: int = 64):
     return F.pmod(F.xxhash64(F.col(entity_col)), F.lit(n_buckets)).cast("int")
 
 
+def _unhashable(dt: DataType) -> bool:
+    """True iff ``dt`` contains a map or variant at any nesting depth."""
+    if isinstance(dt, (MapType, VariantType)):
+        return True
+    if isinstance(dt, ArrayType):
+        return _unhashable(dt.elementType)
+    if isinstance(dt, StructType):
+        return any(_unhashable(f.dataType) for f in dt.fields)
+    return False
+
+
+def _row_hash(df: DataFrame, bucket: str = "p_bucket") -> Column:
+    """The :data:`ROW_HASH` expression: ``xxhash64`` over the typed values
+    of every column but ``bucket``, in schema order; map/variant-bearing
+    columns go through ``cast("string")``; nulls are skipped."""
+    return F.xxhash64(*[
+        F.col(f.name).cast("string") if _unhashable(f.dataType) else F.col(f.name)
+        for f in df.schema.fields
+        if f.name != bucket
+    ])
+
+
 def content_stats(df: DataFrame, bucket: str = "p_bucket") -> dict[int, dict]:
-    """Per-bucket row_count + order-independent xor of row hashes.
-    The row hash covers every column (cast to string for stability)."""
-    cols = [c for c in df.columns if c != bucket]
-    row_hash = F.xxhash64(*[F.col(c).cast("string") for c in cols])
-    # xor aggregate via bit_xor
+    """Per-bucket row_count + content hash: the xor of :func:`_row_hash`
+    (typed ``xxhash64`` of every column but ``bucket``, in schema order;
+    map/variant columns via their string rendering; nulls skipped)."""
     agg = df.groupBy(bucket).agg(
         F.count(F.lit(1)).alias("row_count"),
-        F.bit_xor(row_hash).alias("content_hash"),
+        F.bit_xor(_row_hash(df, bucket)).alias("content_hash"),
     )
     return {
         int(r[bucket]): {"row_count": int(r["row_count"]), "content_hash": int(r["content_hash"])}
@@ -79,6 +114,7 @@ class CheckpointManifest:
                 "status": "done",
                 "row_count": s["row_count"],
                 "content_hash": s["content_hash"],
+                "row_hash": ROW_HASH,
                 "completed_at": time.time(),
             }
         self._flush()
@@ -202,13 +238,20 @@ def _observed_bucket_stats(out: DataFrame, pending: list[int], bucket: str = "p_
     ``observe()`` node (64 buckets each): a few hundred cheap comparisons
     per row riding the write stage, vs. a full second read of the output
     (the round-2 anti-pattern), and no single pathologically wide
-    aggregate at large ``n_buckets``.  The row hash is identical to
-    :func:`content_stats` (same column order, same string casts), so
-    ``verify=True`` read-back audits compare exactly."""
+    aggregate at large ``n_buckets``.
+
+    The row hash is :func:`_row_hash`, the one :func:`content_stats`
+    folds, so ``verify=True`` read-back audits compare exactly: typed
+    ``xxhash64`` of every column but ``bucket`` in schema order,
+    map/variant columns via their string rendering, nulls skipped,
+    xor-folded per bucket.  It is projected once per row as a column
+    ahead of the observe nodes (each node only compares ``bucket`` and
+    folds a long) and dropped after them, so the written rows are
+    unchanged."""
     from pyspark.sql import Observation
 
-    cols = [c for c in out.columns if c != bucket]
-    row_hash = F.xxhash64(*[F.col(c).cast("string") for c in cols])
+    out = out.withColumn("__row_hash", _row_hash(out, bucket))
+    row_hash = F.col("__row_hash")
     per_chunk = _OBSERVE_CHUNK_EXPRS // 2
     observations = []
     for ci in range(0, len(pending), per_chunk):
@@ -221,7 +264,7 @@ def _observed_bucket_stats(out: DataFrame, pending: list[int], bucket: str = "p_
         obs = Observation(f"checkpoint_bucket_stats_{ci}")
         out = out.observe(obs, *exprs)
         observations.append(obs)
-    return out, observations
+    return out.drop("__row_hash"), observations
 
 
 def run_with_checkpoint(

@@ -241,6 +241,83 @@ def test_observed_hashes_equal_readback_content_stats(spark, transcripts, tmp_pa
     }
 
 
+def test_observed_row_hash_is_one_typed_xxhash64(spark, transcripts):
+    """The commit hashes each row ONCE (one xxhash64 projected ahead of
+    the observe nodes) over typed values: no string casts when the
+    schema has no map or variant column."""
+    from featherstore_spark.plans.checkpoint import _observed_bucket_stats
+
+    # a local relation: the cached fixture's lineage carries datagen's
+    # own xxhash64 calls
+    df = spark.createDataFrame(transcripts.limit(10).collect(), transcripts.schema)
+    df = df.withColumn("p_bucket", F.pmod("turn_idx", F.lit(4)))
+    observed, obs_list = _observed_bucket_stats(df, list(range(200)))
+    assert len(obs_list) > 1  # several observe nodes share the one hash
+    plan = observed._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("xxhash64(") == 1, plan
+    assert "as string)" not in plan, plan
+    assert observed.columns == df.columns
+
+
+def test_map_and_variant_columns_commit_with_verify(spark, transcripts, tmp_path):
+    """map and variant values (top level or nested) are hashed through
+    their string rendering, since xxhash64 rejects them; the commit
+    still verifies observed == read-back."""
+    from featherstore_spark.plans.checkpoint import content_stats
+    from featherstore_spark.plans.materialize import build_feature_log
+
+    def pipeline(t):
+        m = F.create_map(F.col("role"), F.col("turn_idx"))
+        return build_feature_log(t).select(
+            "conv_id",
+            "turn_idx",
+            m.alias("m"),
+            F.struct(F.array(m).alias("am")).alias("nested"),
+            F.parse_json(F.to_json(F.struct("role", "turn_idx"))).alias("v"),
+        )
+
+    out = str(tmp_path / "feat")
+    m = run_with_checkpoint(
+        transcripts, out, LINEAGE, n_buckets=8, pipeline=pipeline, verify=True
+    )
+    assert m["total_rows"] == transcripts.count()
+    back = spark.read.parquet(out)
+    assert back.schema["m"].dataType.simpleString() == "map<string,int>"
+    assert back.schema["v"].dataType.simpleString() == "variant"
+    man = _read_manifest(out)
+    assert {int(b): v["content_hash"] for b, v in man["buckets"].items()} == {
+        b: v["content_hash"] for b, v in content_stats(back).items()
+    }
+
+
+def test_untagged_manifest_resumes_without_recompute(spark, transcripts, tmp_path):
+    """A manifest written before bucket entries carried a ``row_hash``
+    tag resumes as-is: its done buckets are not recomputed (same
+    completion stamps, still untagged) and only the buckets the crash
+    lost are recomputed, under the current row hash."""
+    from featherstore_spark.plans.checkpoint import ROW_HASH
+
+    out = str(tmp_path / "feat")
+    run_with_checkpoint(transcripts, out, LINEAGE, n_buckets=8)
+    old = _read_manifest(out)
+    for v in old["buckets"].values():
+        del v["row_hash"]
+    kept = dict(list(old["buckets"].items())[:4])
+    old["buckets"] = kept
+    with open(os.path.join(out, MANIFEST), "w") as fh:
+        json.dump(old, fh)
+
+    m = run_with_checkpoint(transcripts, out, LINEAGE, n_buckets=8)
+    final = _read_manifest(out)["buckets"]
+    assert m["total_rows"] == transcripts.count()
+    assert len(final) > len(kept)
+    for b, v in final.items():
+        if b in kept:
+            assert v == kept[b]  # same completed_at, no tag
+        else:
+            assert v["row_hash"] == ROW_HASH
+
+
 def test_all_done_resume_launches_no_job(spark, transcripts, tmp_path, monkeypatch):
     """A fully-done manifest short-circuits driver-side: no write job at
     all (replaces the round-2 isEmpty() pre-job).  n_buckets=4 so the

@@ -612,8 +612,8 @@ def test_matrix_candidates_string_ids_and_group_sweep(spark):
 
 def test_matrix_candidates_guards(spark):
     """threshold <= 0 is rejected (empty/disjoint pairs qualify there,
-    which candidates cannot represent) and an over-budget task block
-    fails loudly with the groups= advice instead of OOMing."""
+    which candidates cannot represent) and an over-budget task block is
+    row-sliced instead of failing the job."""
     from featherstore_spark.operators.dedup import (
         char_ngram_jaccard_pairs,
         matrix_allpairs_candidates,
@@ -627,8 +627,40 @@ def test_matrix_candidates_guards(spark):
     docs = spark.createDataFrame([(1, "aaa", "en")], "doc_id long, text string, lang string")
     with pytest.raises(ValueError, match="threshold > 0"):
         char_ngram_jaccard_pairs(docs, threshold=0.0, method="matrix")
-    with pytest.raises(Exception, match="max_task_pairs"):
-        matrix_allpairs_candidates(sets, 0.5, groups=1, max_task_pairs=100).collect()
+    got = matrix_allpairs_candidates(sets, 0.5, groups=1, max_task_pairs=100).collect()
+    assert sorted((r["id_a"], r["id_b"]) for r in got) == [
+        (a, b) for a in range(40) for b in range(a + 1, 40)
+    ]
+
+
+def test_matrix_over_cap_block_matches_block(spark, documents, monkeypatch):
+    """A task block far over max_task_pairs (cap below one group's n²,
+    both within-group and cross-group tasks) completes in row slices,
+    and its verified pairs equal the brute blocked join."""
+    from functools import partial
+
+    from featherstore_spark.operators import dedup
+    from featherstore_spark.operators.dedup import char_ngram_jaccard_pairs
+
+    base = documents.where(F.col("doc_id") < 60)
+    damaged = (
+        base.where(F.col("doc_id") < 20)
+        .withColumn("doc_id", F.col("doc_id") + 200000)
+        .withColumn("text", F.concat(F.col("text"), F.lit(" xq")))
+    )
+    corpus = base.unionByName(damaged)
+    monkeypatch.setattr(
+        dedup,
+        "matrix_allpairs_candidates",
+        partial(dedup.matrix_allpairs_candidates, groups=2, max_task_pairs=30),
+    )
+    for blk in (None, "lang"):
+        kw = {"block_col": blk} if blk else {}
+        mx = sorted(map(tuple, char_ngram_jaccard_pairs(
+            corpus, n=3, threshold=0.25, method="matrix", **kw).collect()))
+        brute = sorted(map(tuple, char_ngram_jaccard_pairs(
+            corpus, n=3, threshold=0.25, method="block", **kw).collect()))
+        assert mx == brute and brute, (blk, len(mx), len(brute))
 
 
 def test_char_ngram_auto_picks_matrix_midrange(spark, documents):
