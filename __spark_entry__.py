@@ -2497,17 +2497,26 @@ def _build_cascade_rollup_oracle(
 ) -> str:
     """Direct (non-cascaded) recomputation of every rollup level from
     raw rows — hash equality against the Spark cascade proves the
-    mergeable-partial algebra."""
+    mergeable-partial algebra.
+
+    Like the operator, it sums ``value`` as an exact DECIMAL(38, 6) and
+    rounds HALF_UP from that sum.  DuckDB divides decimals in double, so
+    avg_v is the exact HALF_UP quotient in integer µ-units:
+    ``sign(s) * floor((2|s·10⁶| + n) / 2n)``."""
     parts = []
     for lvl in levels:
         parts.append(f"""
-            SELECT '{lvl}' AS resolution, event_type,
-                   time_bucket(INTERVAL '{lvl}', ts) AS bucket_start,
-                   COUNT(*)::BIGINT AS n,
-                   ROUND(SUM(value), 4) AS sum_v,
-                   MIN(value) AS min_v, MAX(value) AS max_v,
-                   ROUND(SUM(value) / COUNT(*), 6) AS avg_v
-            FROM events GROUP BY 2, 3
+            SELECT '{lvl}' AS resolution, event_type, bucket_start, n,
+                   ROUND(s, 4)::DOUBLE AS sum_v, min_v, max_v,
+                   (SIGN(s) * ((2 * ABS(CAST(s * 1000000 AS HUGEINT)) + n) // (2 * n)))::DOUBLE
+                       / 1000000 AS avg_v
+            FROM (
+                SELECT event_type, time_bucket(INTERVAL '{lvl}', ts) AS bucket_start,
+                       COUNT(*)::BIGINT AS n,
+                       SUM(CAST(value AS DECIMAL(38, 6))) AS s,
+                       MIN(value) AS min_v, MAX(value) AS max_v
+                FROM events GROUP BY 1, 2
+            )
         """)
         # direct GROUP BY per level; the Spark side only ever scans raw
         # rows once and cascades partials upward

@@ -24,6 +24,8 @@ import argparse
 import json
 import sys
 
+from featherstore_spark.operators.asof import STRATEGIES
+
 
 def _build_parser(cfg: dict) -> argparse.ArgumentParser:
     """Parser with defaults drawn from the resolved config (config.py):
@@ -50,8 +52,7 @@ def _build_parser(cfg: dict) -> argparse.ArgumentParser:
     m.add_argument("--spine", help="optional spine table path -> point-in-time vectors")
     m.add_argument("--trailing", default=pipe["trailing"])
     m.add_argument("--session-gap", default=pipe["session_gap"])
-    m.add_argument("--asof-strategy", default=pipe["asof_strategy"],
-                   choices=["window", "cogroup", "bucketed"])
+    m.add_argument("--asof-strategy", default=pipe["asof_strategy"], choices=STRATEGIES)
     m.add_argument("--asof-bucket", default=pipe["asof_bucket"])
     m.add_argument("--n-buckets", type=int, default=pipe["n_buckets"])
     m.add_argument("--resume", action="store_true", help="skip buckets already checkpointed")
@@ -133,7 +134,13 @@ def main(argv: list[str] | None = None) -> int:
     from featherstore_spark.config import load_config
 
     cfg = load_config(_scan_config_path(argv))
-    args = _build_parser(cfg).parse_args(argv)
+    parser = _build_parser(cfg)
+    args = parser.parse_args(argv)
+    # argparse never checks a default against ``choices``: a strategy named
+    # only in the config (e.g. the removed ``cogroup``) is rejected here,
+    # before any Spark work
+    if args.cmd == "materialize" and args.asof_strategy not in STRATEGIES:
+        parser.error(f"asof_strategy {args.asof_strategy!r} is not one of {', '.join(STRATEGIES)}")
 
     if args.cmd == "serve":
         # zero-Spark path: serving must never launch (or depend on) a session

@@ -25,6 +25,9 @@ from pyspark.sql import functions as F
 
 from featherstore_spark.functions.time import interval_to_us
 
+#: Type of the exact per-bucket value sum (the DuckDB oracle sums the same).
+EXACT_SUM = "decimal(38,6)"
+
 
 def cascade_rollup(
     df: DataFrame,
@@ -37,9 +40,11 @@ def cascade_rollup(
     must evenly divide the next — validated loudly, because a 7-minute →
     1-hour cascade silently mis-buckets).  Returns the UNION of all
     levels: (resolution, *keys, bucket_start, n, sum_v, min_v, max_v,
-    avg_v), with sum_v/avg_v rounded (4/6) so float sum-order noise
-    between the cascade and any direct recomputation stays far inside
-    the rounding grid.
+    avg_v).  ``value_col`` is summed as an exact ``DECIMAL(38, 6)``
+    (:data:`EXACT_SUM`), so the sum does not depend on summation order or
+    partitioning; sum_v/avg_v are rounded HALF_UP (4/6 dp) from that exact
+    sum and cast back to double.  A double sum would flip a 7th-decimal
+    tie (e.g. 1114.23 / 32 = 34.8196875) with the core count.
 
     Buckets come from ``F.window`` (epoch-aligned; minute/hour/day all
     align identically to DuckDB's ``time_bucket``).  Coarser levels
@@ -60,22 +65,17 @@ def cascade_rollup(
             *keys,
             "bucket_start",
             "n",
-            F.round("sum_raw", 4).alias("sum_v"),
+            F.round("sum_raw", 4).cast("double").alias("sum_v"),
             F.col("min_v"),
             F.col("max_v"),
-            F.round(F.col("sum_raw") / F.col("n"), 6).alias("avg_v"),
+            F.round(F.col("sum_raw") / F.col("n"), 6).cast("double").alias("avg_v"),
         )
 
-    # NOTE (r6): do NOT rebalance df here — the finest level's
-    # ``sum(value)`` over doubles is summation-order dependent, and a
-    # repartition reorders the partial sums enough to flip a rounded
-    # 4-dp value on a tie (measured: one changed row at sf0.1).  The
-    # single-split scan cost stays on the raw table's owner.
     base = (
         df.groupBy(*keys, F.window(ts_col, levels[0]).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(value_col).alias("sum_raw"),
+            F.sum(F.col(value_col).cast(EXACT_SUM)).alias("sum_raw"),
             F.min(value_col).alias("min_v"),
             F.max(value_col).alias("max_v"),
         )

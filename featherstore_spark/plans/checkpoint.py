@@ -22,6 +22,11 @@ Design:
   is a pure function of conv_id, so filtering pushes to the scan), then
   dynamic-partition-overwrite writes exactly those buckets — completed
   partitions are never touched or recomputed.
+- Each bucket is written as ONE file: the output is repartitioned on
+  ``p_bucket`` and sorted by (entity, ``turn_idx`` or ``ts``) within each
+  partition before the write.  A hot entity's bucket is therefore sorted
+  and written by one task; bucket count, not entity skew, sets write
+  parallelism.
 - One driver-side JSON per run; everything per-row stays distributed.
 - If the lineage fingerprint changes (different input or params), the
   manifest is discarded and the run starts clean — resume must never serve
@@ -346,7 +351,11 @@ def run_with_checkpoint(
             pending_spine = pending_spine.where(~F.col("p_bucket").isin(sorted(done)))
         result = pipeline(pending_input.drop("p_bucket"), pending_spine.drop("p_bucket"))
 
-    out = result.withColumn("p_bucket", b)
+    # One shuffle on p_bucket puts every bucket in exactly one task, so
+    # each bucket is written as ONE file whatever partitioning the
+    # pipeline left behind (each extra parquet file costs ~5 KB of
+    # footer/metadata).
+    out = result.withColumn("p_bucket", b).repartition("p_bucket")
     sort_key = "turn_idx" if "turn_idx" in out.columns else "ts"
     out = out.sortWithinPartitions(entity_col, sort_key) if sort_key in out.columns else out
     out, obs_list = _observed_bucket_stats(out, pending)

@@ -173,28 +173,3 @@ def validate_transcripts(df: DataFrame) -> DataFrame:
                 "matching reference parquet.go:921-925)"
             )
     return df.select(*[f.name for f in TRANSCRIPT_SCHEMA.fields])
-
-
-def validate_feature_log(df: DataFrame, entity_col: str = "conv_id", ts_col: str = "ts") -> DataFrame:
-    """A feature log needs a string-ish entity column and a timestamp column
-    (reference: entity_id mandatory duckdb.go:133-144; timestamp indexed
-    duckdb.go:946-963). Null timestamps are rejected at materialize time
-    (C6) rather than defaulted to now().
-    """
-    cols = {f.name: f.dataType for f in df.schema.fields}
-    if entity_col not in cols:
-        raise SchemaValidationError(f"feature log missing entity column {entity_col!r}")
-    if ts_col not in cols:
-        raise SchemaValidationError(f"feature log missing timestamp column {ts_col!r}")
-    if not isinstance(cols[ts_col], T.TimestampType):
-        raise SchemaValidationError(
-            f"feature log {ts_col!r} must be timestamp, got {cols[ts_col].simpleString()}"
-        )
-    return df
-
-
-def feature_columns(df: DataFrame, entity_col: str = "conv_id", ts_col: str = "ts") -> list[str]:
-    """Everything that is not a reserved column is a feature
-    (reference duckdb.go:229-243 excludes entity_id/timestamp from Feature
-    metadata the same way)."""
-    return [c for c in df.columns if c not in (entity_col, ts_col)]

@@ -122,12 +122,3 @@ def create_transcripts_iceberg(
     empty.writeTo(table).partitionedBy(
         F.bucket(n_buckets, F.col("conv_id")), F.days(F.col("ts"))
     ).create()
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One of the driver-provided tables (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -69,6 +69,20 @@ def test_cli_config_seeds_parser_defaults_but_flags_win(tmp_path):
     assert _scan_config_path(["materialize"]) is None
 
 
+def test_cli_rejects_removed_asof_strategy_from_config(tmp_path, capsys):
+    """A config still naming the removed ``cogroup`` strategy fails at
+    parse time with the valid list — argparse alone never checks a
+    default against ``choices``."""
+    from featherstore_spark.cli import main
+
+    p = tmp_path / "engine.yaml"
+    p.write_text("pipeline:\n  asof_strategy: cogroup\n")
+    with pytest.raises(SystemExit) as exc:
+        main(["--config", str(p), "materialize", "--input", "i", "--output", "o"])
+    assert exc.value.code == 2
+    assert "'cogroup' is not one of window, bucketed" in capsys.readouterr().err
+
+
 def test_cli_serve_starts_both_transports(tmp_path):
     """`featherstore_spark serve` wires Flight + HTTP over ONE store:
     requests over either transport land in the same metrics registry."""

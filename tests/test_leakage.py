@@ -12,11 +12,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from featherstore_spark.datagen import generate_spine, generate_transcripts
-from featherstore_spark.operators.asof import asof_join
+from featherstore_spark.operators.asof import STRATEGIES, asof_join
 from featherstore_spark.operators.windows import turn_features
 
 POISON = 1e18
-STRATEGIES = ["window", "cogroup", "bucketed"]
 
 
 @pytest.mark.parametrize("strategy", STRATEGIES)

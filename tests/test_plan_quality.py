@@ -77,7 +77,9 @@ def test_semi_join_is_broadcast(spark):
 def test_bucketed_asof_plan_shape(spark):
     df = entry_mod.q_asof_join_bucketed(spark, SF_DIR)
     plan = _plan(df)
-    assert "FlatMapCoGroupsInPandas" in plan  # Arrow-vectorized cogroup
+    # one JVM window kernel: no Python node anywhere in the as-of plan
+    for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

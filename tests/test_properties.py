@@ -11,7 +11,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from featherstore_spark.operators.asof import asof_join
+from featherstore_spark.operators.asof import STRATEGIES, asof_join
 from featherstore_spark.oracle import asof_join_pd
 
 BASE = datetime(2026, 1, 1)
@@ -40,7 +40,7 @@ def sparkref(spark):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-@given(feats=feature_rows, spine=spine_rows, strategy=st.sampled_from(["window", "cogroup", "bucketed"]))
+@given(feats=feature_rows, spine=spine_rows, strategy=st.sampled_from(STRATEGIES))
 def test_asof_equals_oracle_on_random_inputs(sparkref, feats, spine, strategy):
     spark = sparkref
     fdf = spark.createDataFrame(

@@ -4,7 +4,7 @@ Sketch claims: deterministic under repartitioning, mergeable (disjoint
 sub-corpora sketches merge to the union's sketch), unsaturated == exact,
 saturated estimate within KMV error bounds and equal to the pure-python
 reference.  Rollup claims: cascade == direct per level, divisibility
-guard, single raw scan."""
+guard, single raw scan, partitioning-free rounding of exact ties."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from featherstore_spark.operators.rollup import cascade_rollup
+from featherstore_spark.operators.rollup import EXACT_SUM, cascade_rollup
 from featherstore_spark.operators.sketch import (
     kmv_distinct,
     kmv_estimate_py,
@@ -89,16 +89,43 @@ def test_cascade_equals_direct_per_level(spark):
         ev.groupBy("event_type", F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("sum_v"),
+            F.sum(F.col("value").cast(EXACT_SUM)).alias("s"),
             F.min("value").alias("min_v"),
             F.max("value").alias("max_v"),
-            F.round(F.sum("value") / F.count(F.lit(1)), 6).alias("avg_v"),
         )
+        .withColumn("sum_v", F.round("s", 4).cast("double"))
+        .withColumn("avg_v", F.round(F.col("s") / F.col("n"), 6).cast("double"))
         .select("event_type", F.col("w.start").alias("bucket_start"), "n", "sum_v", "min_v", "max_v", "avg_v")
     )
     got = sorted(map(tuple, hour.drop("resolution").collect()))
     exp = sorted(map(tuple, direct.collect()))
     assert got == exp
+
+
+def test_cascade_tie_rounds_the_same_under_any_partitioning(spark):
+    """1114.23 / 32 = 34.8196875 sits exactly on a 7th-decimal tie.  A
+    double sum lands an ulp either side of 1114.23 depending on summation
+    order, so avg_v flipped with the partition count; the exact decimal
+    sum rounds HALF_UP to 34.819688 under any partitioning, and the
+    DuckDB oracle agrees."""
+    from datetime import datetime, timedelta
+
+    import duckdb
+
+    from __spark_entry__ import _build_cascade_rollup_oracle
+
+    t0 = datetime(2026, 1, 1)
+    rows = [("click", t0 + timedelta(seconds=i), 34.81) for i in range(31)]
+    rows.append(("click", t0 + timedelta(seconds=31), 35.12))
+    ev = spark.createDataFrame(rows, "event_type string, ts timestamp, value double")
+    levels = ("1 minute", "1 hour")
+    want = {lvl: (1114.23, 34.819688) for lvl in levels}
+    for n in (1, 7):
+        out = cascade_rollup(ev.repartition(n), keys=["event_type"], levels=levels)
+        assert {r["resolution"]: (r["sum_v"], r["avg_v"]) for r in out.collect()} == want, n
+    events = ev.toPandas()  # noqa: F841 — read by name in the DuckDB query
+    oracle = duckdb.connect().execute(_build_cascade_rollup_oracle(levels)).fetchall()
+    assert {r[0]: (r[4], r[7]) for r in oracle} == want
 
 
 def test_cascade_divisibility_guard(spark):
